@@ -75,22 +75,32 @@ object TokenStats {
     * the oracle's `list_transform(range(...), i -> h60(t[i] || ' ' ||
     * ...))`. One pass per row riding the scan — the relational build
     * pays a posexplode + window sort (a full exchange of the token
-    * stream) per side just to line up the leads. Empty for n < k. */
+    * stream) per side just to line up the leads. Empty for n < k. A
+    * null token is skipped with its separator, as `concat_ws` skips
+    * it (a k-gram of only nulls hashes the empty string). */
   def gramH60(a: ArrayData, k: Int): ArrayData = {
     val n = a.numElements()
     if (n < k) return emptyLongs
     val toks = new Array[Array[Byte]](n)
     var i = 0
-    while (i < n) { toks(i) = a.getUTF8String(i).getBytes; i += 1 }
+    while (i < n) {
+      if (!a.isNullAt(i)) toks(i) = a.getUTF8String(i).getBytes
+      i += 1
+    }
     val md = java.security.MessageDigest.getInstance("MD5")
     val out = new Array[Long](n - k + 1)
     i = 0
     while (i <= n - k) {
       md.reset()
+      var joined = false
       var j = 0
       while (j < k) {
-        if (j > 0) md.update(' '.toByte)
-        md.update(toks(i + j))
+        val t = toks(i + j)
+        if (t != null) {
+          if (joined) md.update(' '.toByte)
+          md.update(t)
+          joined = true
+        }
         j += 1
       }
       val dg = md.digest()
@@ -163,18 +173,34 @@ case class DupBigramCount(child: Expression)
   override def prettyName: String = "graft_dup_bigrams"
 }
 
+/** The width argument of [[GramHash60]] and [[WindowMin]]: a foldable
+  * positive int. Zero, a negative width or a null would make the
+  * kernels emit n+1 or more windows (or fail mid-task), so analysis
+  * rejects them. */
+private[functions] trait PositiveWidthArg { self: BinaryExpression =>
+  protected def arrayInputOk: Boolean
+  protected def arrayInputSql: String
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (!arrayInputOk || right.dataType != IntegerType || !right.foldable)
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects ($arrayInputSql, int literal), got " +
+          s"(${left.dataType.sql}, ${right.dataType.sql})")
+    else right.eval() match {
+      case w: Int if w > 0 => TypeCheckResult.TypeCheckSuccess
+      case w => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects a positive width, got $w")
+    }
+}
+
 /** `graft_gram_h60(array<string>, k) -> array<bigint>` — see
   * [[TokenStats.gramH60]]; k must be a foldable positive int. */
 case class GramHash60(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<string>, int literal), got " +
-          s"(${left.dataType.sql}, ${right.dataType.sql})")
-    }
+    extends BinaryExpression with PositiveWidthArg {
+  protected def arrayInputOk: Boolean = left.dataType match {
+    case ArrayType(StringType, _) => true
+    case _ => false
+  }
+  protected def arrayInputSql: String = "array<string>"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(a: Any, k: Any): Any =
     TokenStats.gramH60(a.asInstanceOf[ArrayData], k.asInstanceOf[Int])
@@ -189,15 +215,10 @@ case class GramHash60(left: Expression, right: Expression)
 /** `graft_win_min(array<bigint>, w) -> array<bigint>` — see
   * [[TokenStats.winMin]]; w must be a foldable positive int. */
 case class WindowMin(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, false), IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<bigint>, int literal), got " +
-          s"(${left.dataType.sql}, ${right.dataType.sql})")
-    }
+    extends BinaryExpression with PositiveWidthArg {
+  protected def arrayInputOk: Boolean =
+    left.dataType == ArrayType(LongType, containsNull = false)
+  protected def arrayInputSql: String = "array<bigint>"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(a: Any, w: Any): Any =
     TokenStats.winMin(a.asInstanceOf[ArrayData], w.asInstanceOf[Int])

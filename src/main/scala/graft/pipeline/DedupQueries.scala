@@ -577,6 +577,10 @@ $clusterSql
     * and the Spark loop alike. BfsSpec asserts convergence happens
     * strictly below it. */
   val BfsMaxHops = 8
+  // the doubled-step loop in bfsHops advances two levels per round and
+  // stops at `level < BfsMaxHops`: an odd cap would relax one level
+  // past it
+  require(BfsMaxHops % 2 == 0, s"BfsMaxHops must be even, got $BfsMaxHops")
 
   /** Hop distance from each component's canonical doc through near-dup
     * edges — the cluster-QUALITY diagnostic that complements

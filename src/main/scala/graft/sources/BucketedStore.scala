@@ -21,9 +21,8 @@ object BucketedStore {
       spark.sessionState.conf.warehousePath, table.toLowerCase)
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  /** The pre-swap copy's parking path during a [[replace]] swap. */
-  private def oldOf(loc: org.apache.hadoop.fs.Path) =
-    SwapStore.parkedOf(loc, ".bkt-old")
+  /** The pre-swap copy's parking suffix during a [[replace]] swap. */
+  private val OldSuffix = ".bkt-old"
 
   /** THE one table-clearing preamble (VERDICT r14 #5 — previously
     * copied with slight drift into the streaming append path): drop
@@ -115,21 +114,7 @@ object BucketedStore {
       .sortBy(sortCols.head, sortCols.tail: _*)
       .format("parquet").saveAsTable(stageT)
     val loc = locOf(spark, table)
-    val stageLoc = locOf(spark, stageT)
-    val old = oldOf(loc)
-    val fs = fsOf(spark, loc)
-    // `old` can only be a leftover of a COMPLETED prior swap here (loc
-    // exists — recover() above would otherwise have promoted it), so
-    // clearing it before reusing the name never removes the sole copy
-    fs.delete(old, true)
-    val swapped = fs.rename(loc, old) && fs.rename(stageLoc, loc)
-    if (!swapped) {
-      // restore the pre-swap store before failing: a failed replace
-      // leaves the previous content served, not a hole
-      if (!fs.exists(loc) && fs.exists(old)) fs.rename(old, loc)
-      throw new java.io.IOException(s"bucketed swap failed for $table")
-    }
-    fs.delete(old, true) // only after BOTH renames succeeded
+    SwapStore.swap(fsOf(spark, loc), loc, locOf(spark, stageT), OldSuffix)
     // the stage's catalog entry now points at a moved-away location;
     // dropping it deletes nothing under the live table
     spark.sql(s"DROP TABLE IF EXISTS `$stageT`")
@@ -149,7 +134,7 @@ object BucketedStore {
     * roll-forward shared by every two-rename swap module. */
   private[graft] def recover(spark: SparkSession, table: String): Unit = {
     val loc = locOf(spark, table)
-    if (SwapStore.recover(fsOf(spark, loc), loc, ".bkt-old") &&
+    if (SwapStore.recover(fsOf(spark, loc), loc, OldSuffix) &&
         spark.catalog.tableExists(table))
       spark.catalog.refreshTable(table)
   }

@@ -31,7 +31,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 object Compactor {
 
   private val TmpSuffix = ".compact-tmp"
-  private val OldSuffix = ".compact-old"
+  /** The parked-copy suffix of every per-directory swap under a
+    * partitioned store: [[compact]]'s fold and the metadata store's
+    * merge commit park under it, so [[recoverAll]] rolls both back. */
+  private[graft] val OldSuffix = ".compact-old"
 
   /** Crash roll-forward for a [[compact]] swap: a process that died
     * between the two renames left `dir` missing and the only complete
@@ -93,19 +96,9 @@ object Compactor {
       if (n <= df.rdd.getNumPartitions) df.coalesce(n) // no shuffle
       else df.repartition(n)
     val tmp = SwapStore.parkedOf(root, TmpSuffix)
-    val old = SwapStore.parkedOf(root, OldSuffix)
-    // `old` can only be a leftover of a COMPLETED prior swap here
-    // (root exists — recover() above would otherwise have promoted
-    // it), so clearing both stale siblings never removes the sole copy
-    fs.delete(tmp, true); fs.delete(old, true)
+    fs.delete(tmp, true) // a half-written stage IS safe to discard
     out.write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(root, old) || !fs.rename(tmp, root)) {
-      // restore the pre-swap store before failing: a failed compaction
-      // leaves the previous content served, not a hole
-      if (!fs.exists(root) && fs.exists(old)) fs.rename(old, root)
-      throw new java.io.IOException(s"compaction swap failed for $dir")
-    }
-    fs.delete(old, true) // only after BOTH renames succeeded
+    SwapStore.swap(fs, root, tmp, OldSuffix)
     (before.length, parquetCount(root))
   }
 }

@@ -26,6 +26,9 @@ import org.apache.hadoop.fs.Path
   * managed LOCATION survived on disk. */
 object ModelStore {
 
+  /** The pre-swap model's parking suffix during a retrain swap. */
+  private val OldSuffix = ".model-old"
+
   def write(df: DataFrame, table: String): Unit = {
     val spark = df.sparkSession
     val loc = new Path(
@@ -53,30 +56,15 @@ object ModelStore {
       // the location right then sees it missing; the roll-forward
       // below makes that window recoverable, not invisible.)
       val tmp = SwapStore.parkedOf(loc, ".model-tmp")
-      val old = SwapStore.parkedOf(loc, ".model-old")
       // crash recovery FIRST (ADVICE r12): a crash between the two
-      // swap renames leaves `loc` missing and `old` holding the only
-      // complete model — roll it forward before anything is deleted.
-      // Deleting `old` as a "stale leftover" here destroyed that last
-      // copy and made every retry fail on rename(loc, old).
+      // swap renames leaves `loc` missing and the parked copy holding
+      // the only complete model — roll it forward (and refresh the
+      // catalog) before anything is deleted. A vanished `loc` with no
+      // parked copy is a single rename inside the swap.
       recover(spark, table)
       fs.delete(tmp, true) // a half-written stage IS safe to discard
       df.write.mode("overwrite").parquet(tmp.toString)
-      val swapped =
-        if (fs.exists(loc)) {
-          // `old` can only be a leftover of a COMPLETED prior swap
-          // now (loc exists), so dropping it before reusing the name
-          // never removes the sole copy
-          fs.delete(old, true)
-          fs.rename(loc, old) && fs.rename(tmp, loc)
-        } else fs.rename(tmp, loc) // loc vanished: promote the stage
-      if (!swapped) {
-        // restore the previous model before failing, so a failed
-        // retrain leaves the prior generation served, not a hole
-        if (!fs.exists(loc) && fs.exists(old)) fs.rename(old, loc)
-        throw new java.io.IOException(s"model swap failed for $table")
-      }
-      fs.delete(old, true) // only after BOTH renames succeeded
+      SwapStore.swap(fs, loc, tmp, OldSuffix)
       // drop the cached FileIndex so readers list the swapped files
       spark.catalog.refreshTable(table)
     }
@@ -97,7 +85,7 @@ object ModelStore {
     val loc = new Path(
       spark.sessionState.conf.warehousePath, table.toLowerCase)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (SwapStore.recover(fs, loc, ".model-old") &&
+    if (SwapStore.recover(fs, loc, OldSuffix) &&
         spark.catalog.tableExists(table))
       spark.catalog.refreshTable(table)
   }

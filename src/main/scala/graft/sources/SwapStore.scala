@@ -2,16 +2,20 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** THE crash roll-forward for two-rename directory swaps — extracted
-  * (VERDICT r16 #5) so a module doing the swap cannot ship without
-  * recovery wired in. Three stores ride the same discipline with
-  * different parked-path suffixes:
+/** THE two-rename directory swap and its crash roll-forward — one
+  * implementation, so a module doing the swap cannot ship without
+  * recovery wired in. Four commits ride it with different parked-path
+  * suffixes:
   *
   *   - [[BucketedStore.replace]] (`.bkt-old`)
   *   - [[ModelStore.write]]'s retrain path (`.model-old`)
   *   - [[Compactor.compact]] (`.compact-old`)
+  *   - the metadata store's per-pid merge commit
+  *     ([[graft.streaming.StreamingEtl.ParquetMetadataStore]], under
+  *     the Compactor's `.compact-old`, so `Compactor.recoverAll`
+  *     rolls both back)
   *
-  * The swap is rename(root → parked) then rename(staged → root): at
+  * [[swap]] is rename(root → parked) then rename(staged → root): at
   * every instant the data exists complete in exactly one directory,
   * but a crash BETWEEN the renames leaves `root` missing and the only
   * complete copy parked at the dot-prefixed sibling — which partition
@@ -33,6 +37,28 @@ private[graft] object SwapStore {
     * over an enclosing store ignores it. */
   def parkedOf(root: Path, suffix: String): Path =
     new Path(root.getParent, "." + root.getName + suffix)
+
+  /** Replace directory `root` with the complete directory `staged`:
+    * rename(root → parked), rename(staged → root), delete parked. A
+    * missing `root` (a new partition, or a location that vanished) is
+    * a single rename(staged → root). Rolls a crashed prior swap
+    * forward first, so the parked name it clears is always a leftover
+    * of a COMPLETED swap, never the sole copy. A failed rename puts the
+    * pre-swap copy back before throwing: a failed swap leaves the
+    * previous content served, not a hole. */
+  def swap(fs: FileSystem, root: Path, staged: Path, suffix: String): Unit = {
+    recover(fs, root, suffix)
+    val parked = parkedOf(root, suffix)
+    fs.delete(parked, true)
+    val swapped =
+      if (fs.exists(root)) fs.rename(root, parked) && fs.rename(staged, root)
+      else fs.rename(staged, root)
+    if (!swapped) {
+      if (!fs.exists(root) && fs.exists(parked)) fs.rename(parked, root)
+      throw new java.io.IOException(s"swap failed: cannot move $staged to $root")
+    }
+    fs.delete(parked, true) // only after BOTH renames succeeded
+  }
 
   /** Roll a crashed mid-swap state forward: if `root` is missing and
     * the parked copy exists, promote it back. Returns true iff a

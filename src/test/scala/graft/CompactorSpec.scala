@@ -66,15 +66,12 @@ class CompactorSpec extends SparkSpec {
     import graft.streaming.StreamingEtl
     val dir = Files.createTempDirectory("graft-store-compact").toString + "/meta"
     val store = new StreamingEtl.ParquetMetadataStore(spark, dir)
-    // disable AQE for the merge so the shuffle keeps its full task
-    // width and every pid receives files from several writer tasks —
-    // the fan-out shape a real (non-coalesced) store accretes
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      store.merge((0 until 600).map(i => (s"item-$i", "status", "ingested"))
-        .toDF("id", "mkey", "mvalue").repartition(4))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    store.merge((0 until 600).map(i => (s"item-$i", "status", "ingested"))
+      .toDF("id", "mkey", "mvalue").repartition(4))
+    // a merge leaves one file per pid: seed the multi-file fan-out a
+    // long-lived store accretes by re-laying every pid as 4 files
+    new java.io.File(dir).listFiles.filter(_.getName.startsWith("pid="))
+      .foreach(d => fragmentDir(d.getPath, 4))
     def files(): Int = new java.io.File(dir).listFiles
       .filter(_.getName.startsWith("pid="))
       .map(_.listFiles.count(_.getName.endsWith(".parquet"))).sum

@@ -161,4 +161,53 @@ class FunctionsSpec extends SparkSpec {
         s"win_min mismatch at id=${r.getAs[Int]("id")}")
     }
   }
+
+  test("graft_gram_h60 skips null tokens exactly as the relational concat_ws build") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // containsNull=true input: a null inside a gram, at its edges, a
+    // gram of only nulls, and a null-only array shorter than k
+    val rows = Seq(Seq("a", null, "c", "d"), Seq(null, "b", "c"),
+      Seq("a", "b", null), Seq(null, null, null, "x"), Seq(null, null))
+      .zipWithIndex.map(_.swap).toDF("id", "a")
+    val k = 3
+    val slow = rows.select(col("id"),
+      when(size(col("a")) < k, array().cast("array<long>")).otherwise(
+        transform(sequence(lit(0), size(col("a")) - k),
+          i => graft.pipeline.DupCorpus.h60(concat_ws(" ",
+            element_at(col("a"), i + 1),
+            element_at(col("a"), i + 2),
+            element_at(col("a"), i + 3)))))
+        .as("slow"))
+    val fast = rows.select(col("id"),
+      call_function("graft_gram_h60", col("a"), lit(k)).as("fast"))
+    val cmp = fast.join(slow, "id").collect()
+    assert(cmp.length === 5)
+    cmp.foreach { r =>
+      assert(r.getSeq[Long](1).toList === r.getSeq[Long](2).toList,
+        s"gram_h60 null-token mismatch at id=${r.getAs[Int]("id")}")
+    }
+  }
+
+  test("graft_gram_h60 / graft_win_min reject a width that is not a positive int at analysis") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val toks = Seq(Seq("a", "b", "c")).toDF("a")
+    val longs = Seq(Seq(3L, 1L, 2L)).toDF("a")
+    def rejected(df: org.apache.spark.sql.DataFrame, fn: String, w: Int): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(call_function(fn, col("a"), lit(w))).collect()
+      }
+      assert(e.getMessage.contains("positive width"), e.getMessage)
+    }
+    Seq(0, -1).foreach { w =>
+      rejected(toks, "graft_gram_h60", w)
+      rejected(longs, "graft_win_min", w)
+    }
+    // a width of 1 is the smallest valid one
+    assert(toks.select(call_function("graft_gram_h60", col("a"), lit(1)))
+      .head.getSeq[Long](0).length === 3)
+    assert(longs.select(call_function("graft_win_min", col("a"), lit(1)))
+      .head.getSeq[Long](0).toList === List(3L, 1L, 2L))
+  }
 }

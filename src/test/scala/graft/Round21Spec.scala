@@ -120,12 +120,13 @@ class Round21Spec extends SparkSpec {
 
   test("K2 metadata store housekeeping is SELF-DRIVING: a long stream folds its own per-pid fan-out with no manual compact, replay-idempotent") {
     // VERDICT r16 #2: compact() was called from exactly one place — a
-    // test — so a long-lived runStream kept every touched pid at its
-    // last merge's shuffle-width file fan-out forever. The store now
-    // folds its own fragmented pids at the foreachBatch boundary past
-    // the merge threshold. AQE is disabled and batches are wide so
-    // each merge genuinely writes multi-file pids — the fragmentation
-    // shape a production store (shuffle.partitions=32+) accretes.
+    // test — so a long-lived runStream kept every fragmented pid
+    // fragmented forever. The store now folds its own fragmented pids
+    // at the foreachBatch boundary past the merge threshold. A merge
+    // leaves one file per touched pid, so the fan-out is seeded: after
+    // each even batch the pid it touched is re-laid as 4 files (the
+    // shape other writers' files leave), and the next batch touches a
+    // DIFFERENT pid — only the in-stream fold can collapse it.
     import spark.implicits._
     import graft.streaming.StreamingEtl
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -138,6 +139,17 @@ class Round21Spec extends SparkSpec {
       compactEveryMerges = 2, maxFilesPerPid = 1)
     def msg(i: Int) =
       s"""{"recordId":"rec-$i","parentId":"p","sessionId":"s-$i","documentType":"APPRAISAL","key":"Tasaciones/doc_$i.pdf"}"""
+    // record numbers whose item id hashes into pid 0 (even batches) or
+    // pid 1 (odd batches), the store's pid = pmod(xxhash64(id), 16)
+    val byPid = spark.range(20000).select(col("id").cast("int"),
+        pmod(xxhash64(concat(lit("item-rec-"), col("id").cast("string"))),
+          lit(16L)).cast("int").as("pid"))
+      .filter(col("pid") < 2).orderBy("id").as[(Int, Int)].collect()
+      .groupBy(_._2).map { case (p, rs) => p -> rs.map(_._1).toSeq }
+    def batch(b: Int): Seq[Int] = {
+      val from = (b - 1) / 2 * 150
+      byPid(b % 2).slice(from, from + 150)
+    }
     def maxFilesPerPid(): Int = {
       val pids = new java.io.File(s"$dir/meta").listFiles
       if (pids == null) 0
@@ -145,25 +157,23 @@ class Round21Spec extends SparkSpec {
         .map(_.listFiles.count(_.getName.endsWith(".parquet")))
         .foldLeft(0)(math.max)
     }
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val mem = MemoryStream[String]
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
       q = StreamingEtl.runStream(
         spark, mem.toDF().select(col("value")), store, s"$dir/ckpt")
-      // 9 batches × 150 records: every merge rewrites all 16 pids
-      // from a 4-task shuffle, so an unfolded pid holds several files
       (1 to 9).foreach { b =>
-        mem.addData((0 until 150).map(i => msg(b * 1000 + i)): _*)
+        assert(batch(b).size === 150, s"fixture: batch $b needs 150 records")
+        mem.addData(batch(b).map(msg): _*)
         q.processAllAvailable()
-        if (b % 2 == 0)
-          // no fold since the last odd batch: this batch's merge
-          // fan-out is visible — the state a manual-compact store
-          // would keep forever
+        if (b % 2 == 0) {
+          // no fold since the last odd batch: seeded fan-out in the
+          // pid this batch touched stays — the state a manual-compact
+          // store would keep forever
+          fragmentDir(s"$dir/meta/pid=0", 4)
           assert(maxFilesPerPid() >= 2,
             s"fixture: batch $b must leave real fan-out to fold")
-        else
+        } else
           // the self-driving fold ran INSIDE the stream at this
           // batch's foreachBatch boundary: every pid is back to one
           // scan-efficient file, no manual compact() anywhere
@@ -174,19 +184,17 @@ class Round21Spec extends SparkSpec {
       val rows = store.read().collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
       assert(rows.size === 9 * 150 * 3)
-      assert(rows.contains(("item-rec-1000", "document_type", "APPRAISAL")))
-      assert(rows.contains(("item-rec-9149", "session_id", "s-9149")))
+      val (first, last) = (batch(1).head, batch(9).last)
+      assert(rows.contains((s"item-rec-$first", "document_type", "APPRAISAL")))
+      assert(rows.contains((s"item-rec-$last", "session_id", s"s-$last")))
       // replay: second delivery of an already-merged payload changes
       // nothing (idempotent merge, fold indifferent)
-      mem.addData((0 until 150).map(i => msg(9000 + i)): _*)
+      mem.addData(batch(9).map(msg): _*)
       q.processAllAvailable()
       val rows2 = store.read().collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
       assert(rows2 === rows)
-    } finally {
-      if (q != null) q.stop()
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
+    } finally if (q != null) q.stop()
   }
 
   test("SwapStore.recover is the one roll-forward: promotes exactly when the root is missing and reports it") {

@@ -18,6 +18,23 @@ trait SparkSpec extends AnyFunSuite {
   /** Cancel (not fail) when a fixture SF is absent on this machine. */
   def requireFixture(path: String): Unit =
     assume(new java.io.File(path).isDirectory, s"fixture $path not present")
+
+  /** Re-lay the rows of the flat parquet directory `dir` as `files`
+    * files, content unchanged: the accreted small-file shape that
+    * compaction folds (a metadata-store merge leaves one file per pid,
+    * so fold fixtures seed their fragmentation explicitly). */
+  def fragmentDir(dir: String, files: Int): Unit = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def parquet(p: Path) =
+      fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    val staged = new Path(
+      java.nio.file.Files.createTempDirectory("graft-fragment").toString, "d")
+    spark.read.parquet(dir).repartition(files).write.parquet(staged.toString)
+    parquet(root).foreach(fs.delete(_, false))
+    parquet(staged).foreach(f => fs.rename(f, new Path(root, f.getName)))
+  }
 }
 
 object SparkSpec {

@@ -1178,6 +1178,34 @@ class StreamingSpec extends SparkSpec {
     assert(rows.size === 40)
   }
 
+  test("K2 merge commit: every touched pid holds exactly one file, AQE on or off, and no stage survives") {
+    import spark.implicits._
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try Seq("true", "false").foreach { on =>
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      val dir = Files.createTempDirectory("graft-store-1f").toString + "/meta"
+      val store = new StreamingEtl.ParquetMetadataStore(spark, dir)
+      def parquetFiles(): Map[String, Int] =
+        new java.io.File(dir).listFiles.filter(_.getName.startsWith("pid="))
+          .map(d => d.getName -> d.listFiles.count(_.getName.endsWith(".parquet")))
+          .toMap
+      // a wide first merge (input spread over 4 tasks) into every pid,
+      // then a steady merge into an already-populated store
+      store.merge((0 until 600).map(i => (s"item-$i", "status", "ingested"))
+        .toDF("id", "mkey", "mvalue").repartition(4))
+      assert(parquetFiles().size === 16)
+      assert(parquetFiles().values.forall(_ == 1), s"AQE $on: ${parquetFiles()}")
+      store.merge((0 until 600 by 7).map(i => (s"item-$i", "status", "loaded"))
+        .toDF("id", "mkey", "mvalue").repartition(4))
+      assert(parquetFiles().values.forall(_ == 1), s"AQE $on: ${parquetFiles()}")
+      assert(!new java.io.File(dir + ".tmp").exists, "the stage must not survive a commit")
+      assert(!new java.io.File(dir).listFiles.exists(_.getName.startsWith(".pid=")),
+        "no parked pid may survive a commit")
+      assert(store.read().count() === 600)
+      assert(store.read().filter(col("mvalue") === "loaded").count() === 86)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("S1/K4 streaming wrapper: MemoryStream -> foreachBatch merge, replay-idempotent") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
