@@ -5,7 +5,9 @@ Two rounds in a row closed on a narrative "host drift" thesis. This
 script makes the call mechanical:
 
   * `record` stamps a Bench window (the full per-query JSON line) with
-    uptime/loadavg and saves it under bench/windows/.
+    uptime/loadavg and saves it under bench/windows/. It refuses a
+    window whose load_probe line names failed queries: a query that
+    threw has no time and must never fold into the reference.
   * `report` takes a round's windows, computes each query's BEST
     (min) time across them, and compares against the committed
     all-time per-query reference (bench/reference.json). A query
@@ -16,15 +18,7 @@ script makes the call mechanical:
     `--update-ref` folds the round's new minima and flag history back
     into the reference.
 
-    Round 18+: windows carry per-query CONTAMINATION evidence (Bench
-    times an all-core fixed-work canary before every measurement
-    and samples loadavg every 10 s in-run). Bests are taken over
-    CLEAN samples only (canary within 1.5x of the cross-window
-    floor); a query with no clean sample anywhere is UNADJUDICATED —
-    reported, but neither flagged nor cleared — so a co-tenant burst
-    inside a window no longer manufactures a cross-family flag
-    cohort, and a flag now means "moved while the host was at its
-    own speed". Pre-r18 windows (no canary) keep the old behavior.
+    Every query is judged on its raw best across the windows.
 
   * `resolve` closes a PROFILE escalation AGAINST A RECORDED ARTIFACT
     (round 17: an isolated-JVM profile or an A/B against the prior
@@ -55,10 +49,10 @@ WINDOWS = os.path.join(REPO, "bench", "windows")
 
 
 def parse_bench_lines(text):
-    """The Bench main prints the per-query totals line, and (round 18+)
-    a load_probe line with mid-run loadavg stats plus the per-query
-    contention canary. Returns (bench, probe); probe is None for
-    pre-r18 output (stderr noise and sbt banners are skipped)."""
+    """The Bench main prints the per-query totals line and a load_probe
+    line with mid-run loadavg stats and the failed queries. Returns
+    (bench, probe); probe is None for pre-r18 output (stderr noise and
+    sbt banners are skipped)."""
     bench = probe = None
     for line in text.splitlines():
         line = line.strip()
@@ -81,6 +75,10 @@ def cmd_record(args):
     text = (open(args.bench_json).read() if args.bench_json
             else sys.stdin.read())
     bench, probe = parse_bench_lines(text)
+    failed = (probe or {}).get("failed") or []
+    if failed:
+        raise SystemExit(f"refusing to record: {len(failed)} queries "
+                         f"failed in this window: {', '.join(failed)}")
     with open("/proc/loadavg") as f:
         load = f.read().split()[:3]
     with open("/proc/uptime") as f:
@@ -95,17 +93,8 @@ def cmd_record(args):
         "queries": bench["queries"],
     }
     if probe is not None:
-        # mid-run signals (VERDICT r17 #1): loadavg sampled every 10 s
-        # DURING the sweeps, and the all-core CPU canary timed
-        # immediately before the pass that produced each query's min —
-        # the per-(window, query) contamination evidence report uses
+        # loadavg sampled every 10 s DURING the sweeps
         out["loadavg_run"] = probe.get("loadavg")
-        out["canary"] = probe.get("canary")
-        if probe.get("retry") is not None:
-            # clean-retry provenance (round 18): how many queries had to
-            # be re-measured in quiet gaps, how many recovered a clean
-            # bracket, and how long the bench waited for quiet
-            out["retry"] = probe["retry"]
     os.makedirs(WINDOWS, exist_ok=True)
     path = os.path.join(WINDOWS, args.label + ".json")
     with open(path, "w") as f:
@@ -136,114 +125,23 @@ def cmd_report(args):
         raise SystemExit("no windows given")
     names = sorted(set().union(*[w["queries"].keys() for w in wins]))
 
-    # Contamination-aware bests (VERDICT r17 #1). The canary floor is
-    # the cross-window minimum of the ~12 ms fixed-work all-core
-    # canary; a per-(window, query) sample is CLEAN if its co-located
-    # canary is within 1.5x (+5 ms) of that floor — i.e. the host was
-    # at its own speed when that number was taken. Flags are evaluated
-    # on best-of-CLEAN samples; a query with no clean sample in any
-    # window is UNADJUDICATED (neither flagged nor cleared): flagging
-    # it would re-litigate the environment, clearing it would hide a
-    # real regression behind a burst. Pre-r18 windows carry no canary
-    # and count as clean (the old behavior).
-    all_canary = [c for w in wins for c in (w.get("canary") or {}).values()
-                  if c and c > 0]
-    # The floor is COMMITTED (reference.json carries the all-time
-    # canary min, folded by --update-ref like the query floors): a
-    # round whose every window ran on a contended host must not grade
-    # itself clean against its own degraded best moment — cleanliness
-    # means "the host at the speed the reference floors were set at".
-    ref_floor = ref.get("canary_floor")
-    cands = ([ref_floor] if ref_floor else []) + \
-        ([min(all_canary)] if all_canary else [])
-    canary_floor = min(cands) if cands else None
-
-    def canary_ok(c):
-        return c <= max(canary_floor * 1.5, canary_floor + 0.005)
-
-    # Window-level gate: a window where the MEDIAN bracketing canary is
-    # over the clean threshold spent most of its wall under contention —
-    # its individually-clean-looking samples are still suspect (the
-    # canary sees CPU-queue contention; an always-busy co-tenant also
-    # steals memory bandwidth and page cache, which a 12 ms ALU loop
-    # does not feel but a scan-heavy query does). Only samples from
-    # majority-clean windows can vouch a flag.
-    def window_clean(w):
-        if canary_floor is None:
-            return True
-        cs = sorted(v for v in (w.get("canary") or {}).values() if v and v > 0)
-        if not cs:
-            return True
-        return canary_ok(cs[len(cs) // 2])
-
-    def is_clean(w, n):
-        if canary_floor is None:
-            return True
-        if not window_clean(w):
-            return False
-        c = (w.get("canary") or {}).get(n)
-        if c is None or c <= 0:
-            return True
-        return canary_ok(c)
-
-    best, unadjudicated = {}, []
-    for n in names:
-        clean_ts = [w["queries"][n] for w in wins
-                    if n in w["queries"] and is_clean(w, n)]
-        if clean_ts:
-            best[n] = min(clean_ts)
-        else:
-            best[n] = min(w["queries"][n] for w in wins if n in w["queries"])
-            unadjudicated.append(n)
-
-    # Canary-normalized adjudication (round 19; the r17 verdict's
-    # option (b)). The clean/dirty gate is binary and razor-edged: a
-    # 0.2 ms canary-floor move can flip a whole window's verdict and
-    # discard its minima (observed r19: w5's quietest samples lowered
-    # the floor 9.1 -> 8.9 ms, turning the baseline window — canary
-    # median exactly at the new threshold — from 54% clean to
-    # CONTAMINATED and manufacturing a 40-flag all-family cohort).
-    # Normalization uses the SAME co-located canary as a continuous
-    # covariate instead: each sample's bracketing canary measures how
-    # much slower than its quiet floor the host was at that instant
-    # (an all-core memory-stream workload — the resource mix a scan
-    # pays), so dt / (canary/floor) estimates the quiet-host time and
-    # a flag means "moved relative to the host's speed that minute".
-    # Approximate by design (per-query contention sensitivity varies),
-    # so it is an ADJUDICATION covariate behind --canary-normalize —
-    # reported times, committed floors and the default gate are
-    # untouched; under the flag nothing is UNADJUDICATED because every
-    # sample carries its own covariate.
-    adj = best
-    if getattr(args, "canary_normalize", False) and canary_floor:
-        adj = {}
-        for n in names:
-            cands = []
-            for w in wins:
-                if n not in w["queries"]:
-                    continue
-                c = (w.get("canary") or {}).get(n)
-                f = max(1.0, c / canary_floor) if c and c > 0 else 1.0
-                cands.append(w["queries"][n] / f)
-            adj[n] = min(cands)
-        unadjudicated = []
+    best = {n: min(w["queries"][n] for w in wins if n in w["queries"])
+            for n in names}
 
     # classify BEFORE any update mutates the reference
     pre_queries = dict(ref["queries"])
-    movers, expected, new_queries, contaminated = [], [], [], []
+    movers, expected, new_queries = [], [], []
     for n in names:
         if n not in pre_queries:
             new_queries.append(n)
             continue
         r = pre_queries[n]
-        if not moved(adj[n], r):
+        if not moved(best[n], r):
             continue
-        if n in unadjudicated:
-            contaminated.append((n, r, best[n]))
-        elif any(n.startswith(t) or t in n for t in touched):
-            expected.append((n, r, adj[n]))
+        if any(n.startswith(t) or t in n for t in touched):
+            expected.append((n, r, best[n]))
         else:
-            movers.append((n, r, adj[n]))
+            movers.append((n, r, best[n]))
     flags = dict(ref.get("flags", {}))
     pre_flags = {n: list(v) for n, v in flags.items()}
 
@@ -261,49 +159,27 @@ def cmd_report(args):
                 flags[n].append(args.round)
         # a query that did NOT move this round clears its streak
         for n in list(flags):
-            if n in ref["queries"] and n in adj and \
-                    not moved(adj[n], ref["queries"][n]):
+            if n in ref["queries"] and n in best and \
+                    not moved(best[n], ref["queries"][n]):
                 del flags[n]
         ref["flags"] = flags
         ref["updated_round"] = args.round
-        if canary_floor is not None:
-            # min-fold the canary floor like the query floors: over
-            # rounds it converges to the host's true quiet speed
-            ref["canary_floor"] = round(canary_floor, 5)
         os.makedirs(os.path.dirname(REF), exist_ok=True)
         with open(REF, "w") as f:
             json.dump(ref, f, indent=1, sort_keys=True)
 
     print(f"## Bench adjudication — round {args.round}")
     print()
-    if getattr(args, "canary_normalize", False) and canary_floor:
-        print("Mode: CANARY-NORMALIZED — movers evaluated on "
-              "dt / max(1, canary/floor) (quiet-host estimate); "
-              "reference query floors still fold RAW minima.")
-        print()
-    if canary_floor is not None:
-        print(f"Canary floor {canary_floor*1000:.1f} ms; clean = "
-              f"canary <= max(1.5x floor, floor+5ms). "
-              f"{len(unadjudicated)} queries with no clean sample.")
-        print()
     print("| window | total s | queries | load@rec | load in-run "
-          "min/mean/max | canary med ms | verdict | clean % | uptime h |")
-    print("|---|---|---|---|---|---|---|---|---|")
+          "min/mean/max | uptime h |")
+    print("|---|---|---|---|---|---|")
     for w in wins:
         lr = w.get("loadavg_run") or {}
         lrs = (f"{lr['min']:.1f}/{lr['mean']:.1f}/{lr['max']:.1f}"
                if "max" in lr else "-")
-        cm = w.get("canary") or {}
-        cs = sorted(v for v in cm.values() if v and v > 0)
-        med = f"{cs[len(cs)//2]*1000:.1f}" if cs else "-"
-        verdict = ("-" if not cs else
-                   "clean" if window_clean(w) else "CONTAMINATED")
-        n_c = sum(1 for n in w["queries"] if is_clean(w, n))
-        pct = (f"{100*n_c/len(w['queries']):.0f}" if cm else "-")
         print(f"| {w['label']} | {w['total']:.1f} | {len(w['queries'])} "
               f"| {'/'.join(str(x) for x in w['loadavg'])} "
-              f"| {lrs} | {med} | {verdict} | {pct} "
-              f"| {w['uptime_s']/3600:.1f} |")
+              f"| {lrs} | {w['uptime_s']/3600:.1f} |")
     print()
 
     if movers:
@@ -321,24 +197,6 @@ def cmd_report(args):
         print()
     else:
         print("### No movers on untouched queries — drift gate clean")
-        print()
-    if contaminated:
-        print("### Contaminated — every sample burst-hit, UNADJUDICATED "
-              "(not flagged, not cleared)")
-        print()
-        print("| query | ref s | best (dirty) s | delta | quiet est s |")
-        print("|---|---|---|---|---|")
-        for n, r, b in sorted(contaminated):
-            # optimistic quiet-host estimate: scale each dirty sample
-            # by its canary's inflation over the committed floor (the
-            # brief's canary normalization) — context for the judge,
-            # never flag evidence
-            ests = [w["queries"][n] * canary_floor / w["canary"][n]
-                    for w in wins
-                    if n in w["queries"] and (w.get("canary") or {}).get(n)]
-            est = f"{min(ests):.3f}" if ests else "-"
-            print(f"| {n} | {r:.3f} | {b:.3f} | +{(b/r-1)*100:.0f}% "
-                  f"| {est} |")
         print()
     if expected:
         print("### Movers on TOUCHED queries (expected — new/changed faces)")
@@ -408,17 +266,13 @@ def main():
                     help="comma list of query names/prefixes the round's "
                          "diff touched (their movers are expected)")
     pp.add_argument("--update-ref", action="store_true")
-    pp.add_argument("--canary-normalize", action="store_true",
-                    help="evaluate movers on canary-normalized times "
-                         "(quiet-host estimates) instead of the binary "
-                         "clean/dirty sample gate")
     pp.add_argument("windows", nargs="+")
     pp.set_defaults(fn=cmd_report)
     pv = sub.add_parser("resolve")
     pv.add_argument("--round", type=int, required=True)
     pv.add_argument("--artifact", required=True,
                     help="recorded measurement justifying the resolve "
-                         "(profile_flags/residency/A-B artifact)")
+                         "(profile_flags or A-B artifact)")
     pv.add_argument("names", nargs="*",
                     help="flags to close (default: every active flag "
                          "the artifact covers)")

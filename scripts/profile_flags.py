@@ -13,9 +13,9 @@ with a per-query verdict:
                  the all-time floor: a real plan/code regression, fix
                  it.
   * EXONERATED — the isolated steady state is back inside the band:
-                 the suite-window number was host contention or
-                 suite-JVM residency, not this query's plan. The
-                 artifact IS the exoneration record.
+                 the suite-window number was host contention, not
+                 this query's plan. The artifact IS the exoneration
+                 record.
 
 Usage:
   profile_flags.py --round 17 [--sf /root/testdata/sf0.1] [--reps 5]
@@ -56,9 +56,9 @@ def run_profile(names, sf, reps, cpus):
         raise SystemExit(f"graft.Profile failed rc={out.returncode}")
     for line in out.stdout.splitlines():
         line = line.strip()
-        if line.startswith("{") and '"residency_probe"' in line:
+        if line.startswith("{") and '"metric":"profile"' in line:
             return json.loads(line)
-    raise SystemExit("no residency_probe JSON line in Profile output")
+    raise SystemExit("no profile JSON line in Profile output")
 
 
 def main():
@@ -111,7 +111,6 @@ def main():
         "isolated_jvm": True,
         "loadavg_before": load_before,
         "loadavg_after": load_after,
-        "covariates": probe.get("covariates"),
         "queries": queries,
     }
     os.makedirs(PROFILES, exist_ok=True)

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -10,108 +10,26 @@ import org.apache.spark.sql.SparkSession
   * at the target SF. Steady-state throughput is the number that
   * extrapolates to a long-lived 1000-executor cluster; cold-JVM codegen
   * is a per-process constant, not a per-byte cost.
+  *
+  * A query that throws in a timed sweep gets no time: it is left out of
+  * the `queries` map and the total, named in the `load_probe` line's
+  * `failed` list, and Bench exits 1 after the final line.
   */
 object Bench {
-  /** Sink for the contention canary's result, so the JIT cannot
-    * dead-code-eliminate the fixed-work loop. */
-  @volatile private var canaryBlackhole: Long = 0L
+  type Query = (SparkSession, String) => DataFrame
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing with a parallelism floor: unbounded coalescing
-      // collapses byte-small-but-compute-heavy shuffles (hash fan-outs,
-      // candidate joins) to 1 partition and serializes them; with no
-      // coalescing every tiny stage pays 32-task scheduling overhead.
-      // On a real 100 TB input byte sizes are honest and the floor is
-      // irrelevant.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        math.max(4, cpus.toInt / 4).toString)
-      // 30+ distinct query plans overflow the default 100-entry codegen
-      // cache: the timed pass would recompile what the warmup compiled.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // let one-file-per-bucket scans advertise their in-bucket sort
-      // (required by the layout-served as-of face; see BucketedStore)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // managed-table home for the bucketed-store queries (kept out of
-      // the repo working dir, which is the default warehouse location)
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse-bench")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // corpora are cached per query and deduped by canonical plan —
-    // CacheManager's "already cached" WARN per query is by design here
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.CacheManager",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession(GraftSession.envCpus, "/tmp/graft-warehouse-bench")
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-    // Family-boundary cache lifecycle (VERDICT r11 #5 — suite
-    // residency). MEASURED AND REJECTED as the default (2026-08-15,
-    // both modes full-suite at sf0.1/local[32], same build): releasing
-    // the pooled caches at each family-prefix boundary cost 185.4 s vs
-    // 167.1 s accretion-mode — the warm pass and both sweeps each
-    // rebuild every family's corpus caches, and at this heap (128 GiB
-    // vs MB-scale sf0.1 working sets) reuse beats the memory-pressure
-    // saving everywhere (worst deltas: the GlobalRank-cached rank
-    // faces, +0.7-1.1 s each). The residency hypothesis for the
-    // r10→r11 common-query drift is thereby refuted: accretion-mode
-    // commons came back to 0.996× of r10's sum (canary
-    // text_collocations 0.726 s vs r10's 0.792 s) with 18 MORE queries
-    // resident — the r11 drift was host contention, not cache
-    // accretion. The lifecycle stays available (CachePool.releaseCaches
-    // at family boundaries) for genuinely memory-constrained suites:
-    // set SPARK_GRAFT_FAMILY_RELEASE=1.
-    val familyRelease = sys.env.getOrElse("SPARK_GRAFT_FAMILY_RELEASE", "0") != "0"
-    def family(n: String): String = n.takeWhile(_ != '_')
-    var prevFamily = ""
-    def boundary(name: String): Unit = if (familyRelease) {
-      if (family(name) != prevFamily) graft.pipeline.CachePool.releaseCaches()
-      prevFamily = family(name)
-    }
     qs.foreach { case (name, fn) =>
-      boundary(name)
       val t0 = System.nanoTime()
       try fn(spark, warmDir).count() catch { case _: Throwable => () }
       System.err.println(f"[bench-warm] $name ${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
-    // Two timed sweeps over the FULL query list, per-query min across
-    // sweeps: this host class shows multi-second contention windows that
-    // inflate even 500-row selects 10-30x (measured: 5 identical bench
-    // runs spanned 34-272 s total with trivial queries at 0.4 s in quiet
-    // runs and 13 s inside a window). Back-to-back min-of-2 per query
-    // cannot reject a window longer than both passes (round 4 recorded
-    // dedup_simhash at 78.6 s vs 2-3 s profiled steady-state on
-    // byte-identical code); with interleaved sweeps a window must span
-    // the entire suite twice to poison any single query's min.
-    // Contamination instrumentation (VERDICT r17 #1): the host bursts
-    // to load 10-19 every ~10 minutes INSIDE bench windows, and a
-    // window stamped with one record-time loadavg cannot distinguish a
-    // clean sweep from a burst-hit one — so r17 carried 29 all-family
-    // watch flags that were pure environment. Two in-run signals:
-    //  (a) a daemon samples /proc/loadavg every 10 s across the timed
-    //      sweeps (min/mean/max tell the adjudicator whether a burst
-    //      landed mid-window at all);
-    //  (b) an ALL-CORE fixed-work CPU canary timed immediately before
-    //      EVERY per-query measurement: one thread of pure ALU work
-    //      per processor, wall = time to get every core at once. The
-    //      suite is sequential, so nothing of ours competes with the
-    //      canary — its inflation over the cross-window floor measures
-    //      EXTERNAL contention at that instant. All-core, not
-    //      single-thread, deliberately (measured on this host,
-    //      r18_w1): a co-tenant burst to load 19 on 32 cpus leaves 13
-    //      cores free, so a lone canary thread never queues (max
-    //      20 ms vs 15 ms floor) while the 32-thread Spark queries it
-    //      is supposed to vouch for ARE starved — the canary must
-    //      demand what a query demands. The canary co-located with
-    //      the pass that produced each query's min tells the
-    //      adjudicator whether that specific number is trustworthy.
+    // loadavg sampled every 10 s across the timed sweeps: min/mean/max
+    // tell whether a host burst landed mid-window at all
     val loadSamples = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
     val sampler = new Thread(() => {
       try while (true) {
@@ -122,183 +40,8 @@ object Bench {
       } catch { case _: InterruptedException => () }
     })
     sampler.setDaemon(true); sampler.start()
-    // The canary's work is a MEMORY STREAM, not a register-only ALU
-    // loop (measured r18_w1-w3 in sequence: a pure-LCG canary — all
-    // state in registers, zero memory traffic — stayed within 1.5× of
-    // its floor through co-tenant episodes that inflated scan-heavy
-    // queries 60-120%, because this host's contention is bandwidth/
-    // cache pressure, not CPU-queue depth). One thread per core, each
-    // streaming read+write passes over a private 4 MB buffer (well
-    // past LLC share), wall = time to get every core AND its memory
-    // lane at once — the resource mix a Spark scan actually demands.
-    val canaryThreads = Runtime.getRuntime.availableProcessors
-    val canaryBufs = Array.fill(canaryThreads)(new Array[Long](512 * 1024))
-    def canarySecs(): Double = {
-      val t0 = System.nanoTime()
-      val ts = (0 until canaryThreads).map { t =>
-        val th = new Thread(() => {
-          val buf = canaryBufs(t)
-          var s = 0x9E3779B97F4A7C15L + t
-          var p = 0
-          while (p < 4) { // 4 passes × 4 MB read+write per core
-            var i = 0
-            while (i < buf.length) {
-              s += buf(i); buf(i) = s ^ (s >>> 7); i += 1
-            }
-            p += 1
-          }
-          Bench.canaryBlackhole = s // defeat DCE
-        })
-        th.start(); th
-      }
-      ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Each measurement is BRACKETED by canaries (the after-canary of
-    // query i doubles as the before-canary of query i+1 — one extra
-    // canary per pass, not two per query) and carries the PAIR MAX: a
-    // burst arriving mid-query is invisible to a single leading probe
-    // (measured r18_w1: broad +30-100% movers whose leading canary was
-    // clean) but lands on the trailing one for anything shorter than
-    // the burst itself.
-    // Clean-retry mode (round 18). The window-level contamination gate
-    // is honest but starved: the host bursts every ~10 min, a 2-pass
-    // sweep takes ~25 min wall, so every r18 window self-identified
-    // CONTAMINATED (median canary 1.6-2.3x the committed floor) and the
-    // adjudicator correctly refused to adjudicate — flags neither
-    // cleared nor confirmed. The fix is better SAMPLING, not looser
-    // policy: with SPARK_GRAFT_CLEAN_RETRY=<wall-budget-seconds> set,
-    // after the two standard sweeps every query whose best sample was
-    // burst-bracketed is re-measured inside quiet gaps (probe the
-    // canary; sleep while dirty; when quiet, burn through the dirty
-    // list until the trailing canary goes dirty again), and the
-    // reported number PREFERS the query's best CLEAN-bracketed sample
-    // over a faster-but-dirty one. Every kept number then genuinely ran
-    // on a quiet host, the recorded canary map reflects the kept
-    // samples, and the adjudicator's existing median gate passes on its
-    // own terms — no adjudicator change, no threshold loosening. The
-    // clean threshold is the adjudicator's own: canary <= max(1.5x
-    // floor, floor+5ms) against the COMMITTED cross-round floor
-    // (SPARK_GRAFT_CANARY_FLOOR, else bench/reference.json, else this
-    // run's own canary min). Default OFF: the driver's unattended runs
-    // are byte-identical to the pre-retry behavior.
-    val retryBudget = sys.env.getOrElse("SPARK_GRAFT_CLEAN_RETRY", "0").toInt
-    val floorOpt: Option[Double] =
-      sys.env.get("SPARK_GRAFT_CANARY_FLOOR").map(_.toDouble)
-        .orElse {
-          val f = new java.io.File("bench/reference.json")
-          if (f.exists) {
-            val src = scala.io.Source.fromFile(f)
-            val txt = try src.mkString finally src.close()
-            "\"canary_floor\":\\s*([0-9.eE+-]+)".r
-              .findFirstMatchIn(txt).map(_.group(1).toDouble)
-          } else None
-        }
-    val cleanMode = retryBudget > 0 && floorOpt.isDefined
-    def cleanThr: Double = {
-      val fl = floorOpt.get; math.max(fl * 1.5, fl + 0.005)
-    }
-    val mins = Array.fill(qs.size)(Double.MaxValue)
-    val canaryAtMin = Array.fill(qs.size)(0.0)
-    val cleanMins = Array.fill(qs.size)(Double.MaxValue)
-    val cleanCanary = Array.fill(qs.size)(0.0)
-    for (p <- 1 to 2) {
-      var prevCanary = canarySecs()
-      for (((name, fn), i) <- qs.zipWithIndex) {
-        boundary(name) // outside the timer: the release is lifecycle, not query cost
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val after = canarySecs()
-        System.err.println(f"[bench sweep$p] $name $dt%.1fs")
-        val pair = math.max(prevCanary, after)
-        if (dt < mins(i)) {
-          mins(i) = dt
-          canaryAtMin(i) = pair
-        }
-        if (cleanMode && pair <= cleanThr && dt < cleanMins(i)) {
-          cleanMins(i) = dt
-          cleanCanary(i) = pair
-        }
-        prevCanary = after
-      }
-    }
-    var retryStatsJson = ""
-    if (cleanMode) {
-      val thr = cleanThr
-      val deadline = System.nanoTime() + retryBudget * 1000000000L
-      // Two ways a query needs a quiet-gap re-measure (round 18): it
-      // never got a clean bracket at all, OR its only clean sample is
-      // far slower than a dirty one it also produced — the memoized-
-      // build faces hit this when the build rep (sweep 1, first touch
-      // per dataset) lands in a quiet moment and the cheap memo-served
-      // rep lands in a burst: "prefer clean" would then report the
-      // 30 s build as the query's number (measured r18opt_w2:
-      // ann_ivfpq_recluster_cycle kept a clean 33.9 s build rep over a
-      // dirty 1.1 s steady rep). Re-measuring in a quiet gap gets a
-      // clean STEADY sample; the preference policy itself is unchanged.
-      var dirty = qs.indices.filter(i =>
-        cleanMins(i) == Double.MaxValue ||
-          cleanMins(i) > mins(i) * 1.5 + 0.05).toList
-      val dirtyAfterSweeps = dirty.size
-      var waitedS = 0
-      System.err.println(
-        f"[bench retry] $dirtyAfterSweeps queries lack a clean sample; " +
-          f"budget ${retryBudget}s, threshold ${thr * 1000}%.1f ms")
-      while (dirty.nonEmpty && System.nanoTime() < deadline) {
-        var c = canarySecs()
-        if (c > thr) { Thread.sleep(5000); waitedS += 5 }
-        else {
-          // the host is quiet NOW: re-measure until a trailing canary
-          // reports the next burst, then go back to waiting
-          var remaining = dirty
-          var stillDirty = List.empty[Int]
-          var burst = false
-          while (remaining.nonEmpty && !burst && System.nanoTime() < deadline) {
-            val i = remaining.head; remaining = remaining.tail
-            val (name, fn) = qs(i)
-            boundary(name)
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-            val dt = (System.nanoTime() - t0) / 1e9
-            val after = canarySecs()
-            val pair = math.max(c, after)
-            if (dt < mins(i)) { mins(i) = dt; canaryAtMin(i) = pair }
-            if (pair <= thr) {
-              if (dt < cleanMins(i)) { cleanMins(i) = dt; cleanCanary(i) = pair }
-              System.err.println(f"[bench retry] $name $dt%.1fs clean")
-            } else {
-              stillDirty ::= i
-              burst = after > thr
-              System.err.println(
-                f"[bench retry] $name $dt%.1fs dirty (canary ${pair * 1000}%.1f ms)")
-            }
-            c = after
-          }
-          dirty = stillDirty.reverse ++ remaining
-        }
-      }
-      val recovered = dirtyAfterSweeps - dirty.size
-      System.err.println(
-        s"[bench retry] recovered $recovered/$dirtyAfterSweeps, " +
-          s"still dirty ${dirty.size}, waited ${waitedS}s")
-      retryStatsJson =
-        s""","retry":{"budget_s":$retryBudget,"dirty_after_sweeps":$dirtyAfterSweeps,""" +
-          s""""recovered":$recovered,"still_dirty":${dirty.size},"waited_s":$waitedS}"""
-    }
+    val (results, failed) = sweeps(qs, spark, sfDir)
     sampler.interrupt()
-    // In clean mode each query reports its best CLEAN sample when one
-    // exists (even if a burst-bracketed sample was numerically smaller:
-    // trustworthy beats lucky); queries that never got a clean bracket
-    // fall back to the dirty min, and their dirty canary marks them
-    // UNADJUDICATED downstream exactly as before.
-    val outMins = Array.tabulate(qs.size) { i =>
-      if (cleanMode && cleanMins(i) != Double.MaxValue) cleanMins(i) else mins(i)
-    }
-    val outCanary = Array.tabulate(qs.size) { i =>
-      if (cleanMode && cleanMins(i) != Double.MaxValue) cleanCanary(i) else canaryAtMin(i)
-    }
-    val results = qs.map(_._1).zip(outMins)
     // 3-decimal rounding halves the per-query line (~96 queries × full-
     // precision doubles overflowed the driver's ~2 KB tail window in a
     // prior run and the official total came back unparseable).
@@ -310,65 +53,43 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qjson,"sf":"$sfDir","passes":2}""")
-    // The contamination line (parsed by bench_adjudicate.py record):
-    // mid-run loadavg stats + the per-query canary co-located with
-    // each query's min. 5-decimal canary format — the ~12 ms canary
-    // needs sub-ms resolution for the 1.5× clean threshold.
-    def fmt5(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.5f", Double.box(v))
     val ls = loadSamples.toArray(Array.empty[java.lang.Double]).map(_.doubleValue)
     val loadJson =
       if (ls.isEmpty) """{"n":0}"""
       else s"""{"min":${fmt(ls.min)},"mean":${fmt(ls.sum / ls.length)},"max":${fmt(ls.max)},"n":${ls.length}}"""
-    val canaryJson = qs.map(_._1).zip(outCanary)
-      .map { case (k, v) => "\"" + k + "\":" + fmt5(v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"load_probe","loadavg":$loadJson,"canary":$canaryJson$retryStatsJson,"sf":"$sfDir"}""")
-    // Suite-residency probe (VERDICT r16 #4): re-time the named
-    // queries HERE — end of suite, full pooled/memo/registry/catalog
-    // state resident — with the state counts as covariates. The
-    // committed scripts/residency_probe.py pairs this with the same
-    // queries in a COLD session (graft.Profile, fresh JVM) inside one
-    // load window; the cold-vs-resident delta is then a measurement.
-    // Printed BEFORE the compact total (ADVICE r17): the compact line
-    // must stay the FINAL stdout line or a tail-based parse breaks
-    // whenever the probe env var is set.
-    sys.env.get("SPARK_GRAFT_RESIDENCY_PROBE").filter(_.nonEmpty)
-      .foreach { probe =>
-        val reps =
-          sys.env.getOrElse("SPARK_GRAFT_RESIDENCY_REPS", "5").toInt
-        val qmap = SparkEntry.queries
-        val qobj = probe.split(",").toSeq.filter(qmap.contains).map { n =>
-          val fn = qmap(n)
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-            (System.nanoTime() - t0) / 1e9
-          }
-          "\"" + n + "\":[" + times.map(fmt).mkString(",") + "]"
-        }.mkString("{", ",", "}")
-        println(residencyLine("resident", qobj, spark, sfDir))
-      }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    println(s"""{"metric":"load_probe","loadavg":$loadJson,"failed":$failedJson,"sf":"$sfDir"}""")
     // Compact duplicate of the headline number as the FINAL stdout line:
     // even a 512-byte tail capture still parses the total.
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","passes":2,"nqueries":${results.size}}""")
     graft.pipeline.CachePool.release() // suite boundary: drop pinned corpora
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 
-  /** One parseable JSON line: per-query rep times plus the session
-    * state counts that distinguish a cold boot from an end-of-suite
-    * JVM. Shared by the resident probe above and [[Profile]]'s cold
-    * mode. */
-  private[graft] def residencyLine(mode: String, qobj: String,
-      spark: SparkSession, sfDir: String): String = {
-    val cov = "{" +
-      s""""cachePool":${graft.pipeline.CachePool.poolSize},""" +
-      s""""memoEntries":${graft.pipeline.CachePool.memoSize},""" +
-      s""""centroidRegistry":${graft.functions.CentroidModels.registrySize},""" +
-      s""""groupedRegistry":${graft.functions.GroupedCentroidModels.registrySize},""" +
-      s""""catalogTables":${spark.catalog.listTables().count()}""" + "}"
-    s"""{"metric":"residency_probe","mode":"$mode","queries":$qobj,""" +
-      s""""covariates":$cov,"sf":"$sfDir"}"""
+  /** Times two sweeps over the FULL query list and keeps each
+    * query's min across sweeps. Interleaved sweeps, not back-to-back
+    * reps: a multi-second host contention window must then span the
+    * whole suite twice to poison any single query's min. Returns the
+    * (name, seconds) of every query that ran clean in every sweep, in
+    * `qs` order, and the names of the ones that threw in any sweep. */
+  private[graft] def sweeps(qs: Seq[(String, Query)], spark: SparkSession,
+      sfDir: String): (Seq[(String, Double)], Seq[String]) = {
+    val mins = Array.fill(qs.size)(Double.MaxValue)
+    val threw = Array.fill(qs.size)(false)
+    for (p <- 1 to 2; ((name, fn), i) <- qs.zipWithIndex) {
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        mins(i) = math.min(mins(i), dt)
+        System.err.println(f"[bench sweep$p] $name $dt%.1fs")
+      } catch { case e: Throwable =>
+        threw(i) = true
+        System.err.println(s"[bench sweep$p] $name FAILED: $e")
+      }
+    }
+    val (bad, good) = qs.map(_._1).zip(mins).zip(threw).partition(_._2)
+    (good.map(_._1), bad.map(_._1._1))
   }
 }

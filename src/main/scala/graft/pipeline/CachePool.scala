@@ -80,29 +80,14 @@ object CachePool {
     }
   }
 
-  /** Unpersist the pooled cached relations but KEEP the memoized
-    * model state — the family-boundary lifecycle for memory-
-    * constrained suites (VERDICT r11 #5): the pool holds the
-    * corpus-scale relations whose accretion pressures unrelated
-    * queries' memory, while memo entries are trained models
-    * (centroids, merges, weights, built index-table names) that are
-    * expensive to retrain and mostly driver-sized. A memoized value
-    * that referenced a pooled cache recomputes lazily — correctness
-    * is unaffected, only the cache cost is re-paid on next touch.
-    * NOT the bench default: measured at sf0.1/local[32] the rebuilds
-    * cost +11% wall vs accretion (see Bench.scala's finding). */
-  def releaseCaches(): Unit = synchronized {
+  /** Unpersist every registered relation (non-blocking) and forget it,
+    * models included — the corpus-lifecycle boundary. */
+  def release(): Unit = synchronized {
     pairs.foreach(_._1.unpersist(false))
     pairs.clear()
     pool.foreach(_.unpersist(false))
     pool.clear()
     seen.clear()
-  }
-
-  /** Unpersist every registered relation (non-blocking) and forget it,
-    * models included — the corpus-lifecycle boundary. */
-  def release(): Unit = synchronized {
-    releaseCaches()
     memo.clear()
   }
 
@@ -126,11 +111,8 @@ object CachePool {
     * [[release]] would needlessly drop every other trained model. */
   def memoDrop(key: Any): Unit = synchronized { memo.remove(key); () }
 
-  /** Diagnostic counts for the suite-residency probe (VERDICT r16
-    * #4): how much pooled/memoized state a long-lived session has
-    * accreted — recorded as covariates next to end-of-suite vs
-    * cold-session timings so residency cost is a measurement, not a
-    * hypothesis. */
+  /** How much pooled/memoized state the session holds (read by the
+    * benchmark harness's per-pass cache counters). */
   def poolSize: Int = synchronized { pool.size }
   def memoSize: Int = synchronized { memo.size }
 }

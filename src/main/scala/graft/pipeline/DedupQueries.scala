@@ -617,6 +617,11 @@ $clusterSql
     // and that frontier, so every node still gets its true minimum hop
     // count. dist remains a union of ALREADY-checkpointed layers
     // (≤ BfsMaxHops of them — constant-depth lineage, round 18).
+    // Cost: n1 is not persisted, so its plan is inlined three times per
+    // doubled step (as n2's source, in n2's anti-join set, and in
+    // `next`), and its join+distinct runs 3× inside the one
+    // localCheckpoint job. Each run is dup-graph scale; persisting n1
+    // would add a job per step, which is what the doubling removes.
     while (level < BfsMaxHops && !frontier.isEmpty) {
       val n1 = frontier.join(sym, frontier("doc_id") === sym("doc_a"))
         .select(sym("doc_b").as("doc_id"))

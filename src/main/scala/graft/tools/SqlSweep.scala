@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import graft.queries.SqlQueries
 import org.apache.spark.sql.SparkSession
 
@@ -51,14 +51,8 @@ object SqlSweep {
 
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val s = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh-sweep").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession(GraftSession.envCpus,
+      java.nio.file.Files.createTempDirectory("graft-wh-sweep").toString)
     s.sparkContext.setLogLevel("ERROR")
     val res = classify(s, d)
     res.toSeq.sortBy(_._1).foreach { case (n, st) => println(s"$n: $st") }

@@ -13,6 +13,11 @@ package graft
   * before it shows up in a timing). */
 class PlanHygieneSpec extends SparkSpec {
 
+  test("the suite session is GraftSession's: codegen cache and AQE partition floor") {
+    assert(Seq("spark.sql.codegen.cache.maxEntries",
+      "spark.sql.adaptive.coalescePartitions.minPartitionNum").map(spark.conf.get) === Seq("5000", "4"))
+  }
+
   test("all registered queries plan cleanly: no cartesian, bounded exchanges") {
     // per-query ceilings above the default 32 must be declared with a
     // justification: search_batch_ivf_recall COMPOSES the two complete
